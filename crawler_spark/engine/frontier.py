@@ -53,10 +53,12 @@ import os
 import shutil
 import sys
 import time
+from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types
+from pyspark.util import inheritable_thread_target
 
 from ..functions.urls import canonicalize_url, url_hash, url_host, url_path
 from ..sources.tables import SnapshotTable
@@ -80,7 +82,6 @@ def _read_parquet_dir(path: str, empty_schema):
     their order is irrelevant."""
     import pyarrow as pa
     import pyarrow.parquet as pq
-    from concurrent.futures import ThreadPoolExecutor
 
     files = sorted(
         os.path.join(path, f) for f in os.listdir(path)
@@ -121,6 +122,19 @@ def _node_offsets(path: str) -> tuple[dict[int, int], int]:
         offs[pid] = acc
         acc += per_pid[pid]
     return offs, acc
+
+
+def _offset_of(offs: dict[int, int], pid) -> Column:
+    """Per-partition offset of a partition-id column as a LITERAL
+    array indexed by pid: a constant in the plan, so the lookup runs
+    no job and no Python worker (an offset dim built by
+    createDataFrame from a list is a PythonRDD stage, re-run by every
+    consumer), and stays O(1) per row however many partitions wrote
+    (a literal map scans its keys per row)."""
+    arr = [0] * (max(offs, default=0) + 1)
+    for p, off in offs.items():
+        arr[p] = off
+    return F.array(*[F.lit(v) for v in arr]).cast("array<bigint>")[pid]
 
 
 def _shard_sweep_optimistic(args):
@@ -1371,7 +1385,8 @@ class FrontierEngine:
         return df.select("url", "depth", "host", "salt",
                          frank.alias("frank"), sel.alias("sel"))
 
-    def _write_frontier(self, frontier: DataFrame, rnd: int) -> None:
+    def _write_frontier(self, frontier: DataFrame, rnd: int,
+                        before_commit=None) -> None:
         """Write a frontier round partitioned by the politeness
         verdict. Fusing the budget window into the frontier WRITE
         (instead of a separate cache+count selection job at the start
@@ -1413,7 +1428,11 @@ class FrontierEngine:
         Freezing can also never interact with the depth-correcting
         admit: an improving candidate must beat the frozen depth, but
         arrivals are strictly deeper than every frozen row, so no
-        candidate touching a frozen URL survives the anti-join."""
+        candidate touching a frozen URL survives the anti-join.
+
+        ``before_commit`` runs after the write and the cursor advance,
+        right before the snapshot commit: the explore loop joins the
+        round's image ingest there, so images(r) commits first."""
         if self.enforce_politeness:
             bound = None
             if self.freeze_frontier:
@@ -1463,6 +1482,8 @@ class FrontierEngine:
             else:
                 self._advance_cursor(rnd, takes, counts)
                 self._maybe_spill_cursor(rnd)
+        if before_commit is not None:
+            before_commit()
         # snapshot-commit the round (fast-append; per-partition
         # lineage from footers, no extra Spark job). This commit IS
         # the round's progress record — see _state().
@@ -1513,9 +1534,28 @@ class FrontierEngine:
                 json.dump(man, f, indent=1, sort_keys=True)
 
     def explore(self, max_rounds: int = 10_000) -> None:
-        """Run (or resume) the explore loop to completion. Each round:
-        politeness-budgeted batch selection → fetch join → edge/image
-        extraction → admission → frontier update → checkpoint."""
+        """Run (or resume) the explore loop to completion. Each round
+        is select → fetch/parse/extract → {image ingest ∥ admit} →
+        commit:
+
+          * select: the politeness-budgeted batch, pre-split by the
+            previous round's frontier write (zero Spark jobs),
+          * fetch/parse/extract: the fetch join feeding one fused
+            page-marker + admitted-edge write, committed as crawl(r),
+          * image ingest (``_ingest_images``) on a driver worker
+            thread, BESIDE admission on the calling thread: the two
+            share no input (ingest reads round r's kind=page rows and
+            prior ingests, admission only the kind=edge rows), so
+            their Spark jobs fill each other's idle cores,
+          * commit: the calling thread waits for the ingest before
+            committing frontier(r+1), so the on-disk commit order
+            stays crawl(r) → images(r) → frontier(r+1) and resume
+            (``_state``) is unchanged.
+
+        The worker carries the caller's Spark local properties (job
+        group, description), so every job lands where the caller's
+        jobs do. An exception on either thread propagates out of
+        explore() only after the ingest has stopped."""
         os.makedirs(self.ckpt, exist_ok=True)
         self._pin_config_manifest()
         st = self._state()
@@ -1533,6 +1573,20 @@ class FrontierEngine:
         else:
             self._seen_store_heal(rnd)
             self._imgseen_store_heal()
+        # leaving the with-block — normally or by an exception on the
+        # calling thread — waits for a running ingest
+        with ThreadPoolExecutor(1, thread_name_prefix="ingest") as pool:
+            self._explore_rounds(rnd, max_rounds, pool)
+
+    def _ingest_timed(self, rnd: int, n_batch: int) -> tuple[dict, float]:
+        """``_ingest_images`` plus its own wall time (the round's
+        ``steps.images``), run on the explore loop's worker thread."""
+        t0 = time.time()
+        img_metrics = self._ingest_images(rnd, n_batch)
+        return img_metrics, round(time.time() - t0, 2)
+
+    def _explore_rounds(self, rnd: int, max_rounds: int,
+                        pool: ThreadPoolExecutor) -> None:
         while rnd < max_rounds:
             t_round = time.time()
             steps: dict[str, float] = {}
@@ -1631,10 +1685,23 @@ class FrontierEngine:
             else:  # round fetched pages but admitted no links
                 edges = self.spark.createDataFrame([], self._crawl_schema)
             tick("fetch_extract")
+            # round r's image ingest runs on the worker thread while
+            # this thread admits; properties are captured per submit,
+            # so the worker's jobs carry the caller's current ones
+            ingest = (pool.submit(
+                inheritable_thread_target(self.spark)(self._ingest_timed),
+                rnd, n_batch) if self.ingest_images else None)
             img_metrics = {}
-            if self.ingest_images:
-                img_metrics = self._ingest_images(rnd, n_batch)
-                tick("images")
+
+            def join_ingest() -> None:
+                # the wait is neither step: steps.images is the
+                # ingest's own wall time, steps.admit this thread's
+                nonlocal img_metrics, t_step
+                if ingest is None:
+                    return
+                t_wait = time.time()
+                img_metrics, steps["images"] = ingest.result()
+                t_step += time.time() - t_wait
 
             # candidate admission for the NEXT frontier (BFS depth
             # cap). Parent depth rides along on the edge rows, so no
@@ -1739,7 +1806,8 @@ class FrontierEngine:
                 deferred.unionByName(new_cand)
                 .groupBy("url").agg(F.min("depth").alias("depth"),
                                     F.first("host").alias("host")))
-            self._write_frontier(new_frontier, rnd + 1)
+            self._write_frontier(new_frontier, rnd + 1,
+                                 before_commit=join_ingest)
             tick("admit")
             if self._seen_name is not None:
                 self._seen_store_write(rnd + 1)
@@ -1889,14 +1957,9 @@ class FrontierEngine:
          .withColumn("mono", F.monotonically_increasing_id())
          .write.mode("overwrite").parquet(nodes_path))
         offs, _ = _node_offsets(nodes_path)
-        off_df = self.spark.createDataFrame(
-            list(offs.items()) or [(0, 0)], "pid int, off long")
+        off = _offset_of(offs, F.shiftrightunsigned("mono", 33).cast("int"))
         nodes_id = (self.spark.read.parquet(nodes_path)
-                    .withColumn("pid", F.shiftrightunsigned("mono", 33)
-                                .cast("int"))
-                    .join(F.broadcast(off_df), "pid")
-                    .select("h", (F.col("off")
-                                  + F.col("mono").bitwiseAND(_MONO_MASK))
+                    .select("h", (off + F.col("mono").bitwiseAND(_MONO_MASK))
                             .cast("int").alias("id")))
         self.timings["nodes_write"] = round(time.time() - t0, 2)
         t0 = time.time()
@@ -2032,6 +2095,7 @@ class FrontierEngine:
         sequential memory. Produces claims row-for-row equal to
         strategy='skeleton' (pinned in tests/test_crawl_golden.py)."""
         import numpy as np
+        import pandas as pd
         import pyarrow as pa
 
         from ..core.dfs_kernel import SweepState, _load_lib, csr_runlength
@@ -2096,10 +2160,13 @@ class FrontierEngine:
         def _level_path(lv: int) -> str:
             return os.path.join(label_dir, f"level={lv:03d}")
 
-        (self.spark.createDataFrame(
+        # from pandas, so Arrow hands the rows to the JVM directly (a
+        # Python-list createDataFrame is a PythonRDD stage)
+        seed_pdf = pd.DataFrame(
             [_seed_row(s, i) for s, ids in shard_seed_ids.items()
              for i in ids],
-            f"node int, {mask_ddl}")
+            columns=["node", *mask_cols], dtype="int64")
+        (self.spark.createDataFrame(seed_pdf, f"node int, {mask_ddl}")
          .write.parquet(_level_path(0)))
         level_paths = [_level_path(0)]
         frontier = self.spark.read.parquet(*level_paths)
@@ -2202,7 +2269,6 @@ class FrontierEngine:
             return self._sweep_shards_parallel(
                 order, shard_seed_ids, sharded_path, nodes_path,
                 seed_rows, seeds, _load_shard, shard_procs, nodes_id)
-        from concurrent.futures import ThreadPoolExecutor
         pool = ThreadPoolExecutor(max_workers=1)
         # shard 0's load overlaps the node-count footer scan — the
         # only shard whose IO nothing else can hide
@@ -2593,19 +2659,18 @@ class FrontierEngine:
                 (r["_pid"], r["n"]) for r in
                 ranked.groupBy("_pid").agg(F.count("*").alias("n"))
                 .collect())
-            offs, acc = [], 0
+            offs, acc = {}, 0
             for pid, n_rows in cnt_rows:
-                offs.append((pid, acc))
+                offs[pid] = acc
                 acc += n_rows
-            off_df = self.spark.createDataFrame(
-                offs or [(0, 0)], "_pid int, _off long")
-            visits = (ranked.join(F.broadcast(off_df), "_pid")
+            visits = (ranked
                       .withColumn(
                           "visit_rank",
                           (F.row_number().over(
                               Window.partitionBy("_pid").orderBy("prio"))
-                           - 1 + F.col("_off")).cast("long"))
-                      .drop("_pid", "_off"))
+                           - 1 + _offset_of(offs, F.col("_pid")))
+                          .cast("long"))
+                      .drop("_pid"))
         # politeness schedule: k-th visit of host h → batch k//cap(h).
         # DISTRIBUTED: the window partitions by host (ordering within
         # a host by prio ≡ visit order), so the only serial artifact
@@ -2692,7 +2757,13 @@ class FrontierEngine:
 
         Scale: one anti-join shuffle keyed by src + one narrow Arrow
         pass per round; the ingested-src history read is
-        manifest-driven and column-pruned to `src`."""
+        manifest-driven and column-pruned to `src`.
+
+        Runs on the explore loop's worker thread, beside the round's
+        admission (see explore): it reads only round ``rnd``'s
+        kind=page rows and strictly-prior ingests, and writes only the
+        images table and its seen store, none of which admission
+        touches."""
         import pandas as pd
 
         pdir = os.path.join(self._paths("crawl", rnd), "kind=page")
@@ -2785,7 +2856,13 @@ class FrontierEngine:
         # stage ran on 2-3 cores at any core count (measured 1.4k
         # img/s at local[32] vs the decoder's ~4.9k img/s/core); the
         # shuffle moves only the NEW srcs' bytes and those rounds are
-        # small. Merge path (big rounds): the bucketed join output is
+        # small. The repartition is by src with NO fixed count, so AQE
+        # sizes it from the round's bytes: one Python task for a round
+        # with a few new images (each Python task pays ~0.25 s of
+        # worker set-up on a 4-vCPU host, and competes for cores with
+        # the concurrent admission), up to the core count for big
+        # rounds.
+        # Merge path (big rounds): the bucketed join output is
         # ALREADY hash-partitioned by src into `web_buckets`
         # partitions — repartitioning it re-shuffled every fetched
         # byte of the round's multi-GB image payload a second time
@@ -2795,7 +2872,7 @@ class FrontierEngine:
         if merge_path and self._img_buckets >= npart:
             out = fetched.mapInPandas(dec, self._IMG_INGEST_SCHEMA)
         else:
-            out = (fetched.repartition(npart)
+            out = (fetched.repartition("src")
                    .mapInPandas(dec, self._IMG_INGEST_SCHEMA))
         (out.write.mode("overwrite").partitionBy("valid")
          .parquet(self._paths("images", rnd)))

@@ -19,6 +19,15 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """A quarter of the host's physical memory (MemTotal), capped at
+    32g. The heap is pinned and pre-touched (see get_spark), so all of
+    it is resident from JVM start: a fixed 32g default killed the JVM
+    on a 15 GB host."""
+    total = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(total // 4 // 2**20, 32 * 1024)}m"
+
+
 def get_spark(app: str = "crawler_spark", cores: int | None = None,
               shuffle_partitions: int | None = None,
               extra_conf: dict | None = None) -> SparkSession:
@@ -26,6 +35,8 @@ def get_spark(app: str = "crawler_spark", cores: int | None = None,
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 8)
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
+    driver_mem = (os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+                  or _default_driver_mem())
     b = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app)
@@ -61,7 +72,7 @@ def get_spark(app: str = "crawler_spark", cores: int | None = None,
         .config("spark.local.dir",
                 os.environ.get("SPARK_GRAFT_LOCAL_DIR",
                                "/dev/shm/spark-local"))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", driver_mem)
         # pin the heap: with a floating -Xms, every full GC uncommits
         # heap pages and the next allocation burst re-faults them
         # across all task threads — measured as ~26 of 32 CPUs in
@@ -69,8 +80,7 @@ def get_spark(app: str = "crawler_spark", cores: int | None = None,
         # user CPU sat near zero. Xms=Xmx + AlwaysPreTouch faults the
         # heap exactly once at startup and removes the storm.
         .config("spark.driver.extraJavaOptions",
-                "-Xms" + os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g")
-                + " -XX:+AlwaysPreTouch")
+                f"-Xms{driver_mem} -XX:+AlwaysPreTouch")
         .config("spark.ui.enabled", "false")
         # \r-progress bars interleave with tool stdout (check_oracle
         # lines were swallowed when piped through grep)

@@ -783,7 +783,11 @@ def test_inloop_image_ingest_matches_oracle(spark, tmp_path):
     assert sum(m.get("images_new", 0) for m in ms) == len(ingested)
     assert sum(m.get("images_invalid", 0) for m in ms) == 0
 
-    # caption attribution: first page in DFS order wins per src
+    _assert_first_visit_captions(eng, visits, o)
+
+
+def _assert_first_visit_captions(eng, visits, o) -> None:
+    """Caption attribution: first page in DFS order wins per src."""
     caps = {r["src"]: (r["caption"], r["first_visit_rank"])
             for r in eng.image_captions(visits).collect()}
     rank_of = {v.url: v.rank for v in o.visits}
@@ -792,6 +796,91 @@ def test_inloop_image_ingest_matches_oracle(spark, tmp_path):
         if im["src"] not in first:
             first[im["src"]] = (im["caption"], rank_of[im["page_url"]])
     assert caps == first
+
+
+def test_pipelined_ingest_failure_propagates_and_resumes(spark, tmp_path):
+    """The round's image ingest runs on a worker thread beside
+    admission (frontier.py:explore). An exception in the ingest at
+    round 1 must leave explore() and keep frontier round 2
+    uncommitted (the commit waits for the ingest); a fresh engine
+    then resumes to the oracle's visits, images and captions."""
+    cfg = CrawlConfig(max_depth=3)
+    ck = fresh_ckpt(str(tmp_path / "ingest_fail"))
+    eng1 = FrontierEngine(spark, cfg, FIXDIR, ck, ingest_images=True)
+    ingest = eng1._ingest_images
+
+    def failing_ingest(rnd, n_batch=0):
+        if rnd == 1:
+            raise RuntimeError("injected ingest failure")
+        return ingest(rnd, n_batch)
+
+    eng1._ingest_images = failing_ingest
+    with pytest.raises(RuntimeError, match="injected ingest failure"):
+        eng1.explore()
+    committed = [s["round"] for s in eng1.frontier_table.lineage()
+                 if s["op"] == "round"]
+    assert max(committed) == 1
+    assert eng1.images_table.lineage()[-1]["members"] == ["round=00000"]
+
+    eng = FrontierEngine(spark, cfg, FIXDIR, ck, ingest_images=True)
+    visits = eng.run()
+    o = run_oracle(FIXDIR, cfg)
+    got = [_visit_tuple_engine(r)
+           for r in visits.orderBy("visit_rank").collect()]
+    assert got == [_visit_tuple_oracle(v) for v in o.visits]
+    assert eng.images(visits).count() == len({im["src"] for im in o.images})
+    _assert_first_visit_captions(eng, visits, o)
+
+
+def test_pipelined_admit_failure_waits_for_ingest(spark, tmp_path):
+    """An exception on the admitting thread leaves explore() only
+    after the round's concurrent ingest has finished — no ingest keeps
+    running (or commits) behind the caller's back."""
+    import time
+
+    cfg = CrawlConfig(max_depth=3)
+    eng = FrontierEngine(spark, cfg, FIXDIR,
+                         fresh_ckpt(str(tmp_path / "admit_fail")),
+                         ingest_images=True)
+    ingest, write_frontier = eng._ingest_images, eng._write_frontier
+    finished = []
+
+    def slow_ingest(rnd, n_batch=0):
+        time.sleep(2.0)   # outlasts the failing admission below
+        out = ingest(rnd, n_batch)
+        finished.append(rnd)
+        return out
+
+    def failing_write(frontier, rnd, before_commit=None):
+        if rnd == 2:
+            raise RuntimeError("injected admit failure")
+        return write_frontier(frontier, rnd, before_commit)
+
+    eng._ingest_images = slow_ingest
+    eng._write_frontier = failing_write
+    with pytest.raises(RuntimeError, match="injected admit failure"):
+        eng.explore()
+    assert finished == [0, 1]
+
+
+def test_explore_jobs_stay_in_callers_job_group(spark, tmp_path):
+    """Every Spark job explore() submits — the worker thread's ingest
+    jobs included — carries the caller's job group."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    eng = FrontierEngine(spark, CrawlConfig(max_depth=3), FIXDIR,
+                         fresh_ckpt(str(tmp_path / "group")),
+                         ingest_images=True)
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("explore-under-test", "pipelined explore")
+    try:
+        eng.explore()
+    finally:
+        for k in ("spark.jobGroup.id", "spark.job.description",
+                  "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(k, None)
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+    assert tracker.getJobIdsForGroup("explore-under-test")
 
 
 def test_image_ingest_bloom_identity(spark, tmp_path):
